@@ -9,8 +9,9 @@ Physical plan (the reference's cvor pipeline re-expressed,
 
   points(id, vec, cell)
     -> cell_stats (2 JVM aggs)        [broadcast]
-    -> replicate_ghosts (mapInPandas) [explode candidate cells]
-    -> grouped_apply on cell          [ONE repartitionByRange shuffle]
+    -> replicate_ghosts (mapInPandas) [ghost rows for foreign cells]
+    -> cogroup(ghosts, homes) on cell [ghost-only shuffle; the home
+                                       side reads the aligned layout]
          per cell: build cover tree over home points,
                    batched radius query for home+ghost rows
     -> edges(src, dst, dist)
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import covertree as ct
-from ..plans.grouped import grouped_apply
+from ..plans.metrics import counted_fn, counted_stream
 from ..plans.session import mark_releasable
 from ..sources.tables import vec_matrix
 from .partition import CellStats, cell_stats, replicate_ghosts
@@ -41,7 +42,6 @@ def ball_self_join(
     d: int,
     cover: float = ct.DEFAULT_COVER,
     leaf_size: int = ct.DEFAULT_LEAF_SIZE,
-    strategy: str = "cogroup",
     cell_col: str = "cell",
     fine_col: str | None = None,
     brute_cutoff: int = 1024,
@@ -50,10 +50,11 @@ def ball_self_join(
     """points must carry (id, vec, cell). Returns (src, dst, dist),
     src != dst, both directions.
 
-    ``strategy``: "cogroup" (default; A/B'd fastest at sf0.1 — 0.9-1.1s
-    vs 1.0-1.1 hash_shuffle, 1.45-1.55 range) shuffles ONLY ghost rows
-    against the aligned home layout; the others push home+ghosts
-    through one explicit repartition.
+    Only ghost rows move through the shuffle; homes are read in place
+    from the persisted hash(cell)-partitioned layout (Exchange elided,
+    see knn_self_join). Ghost volume is boundary-sized (O(surface),
+    not O(volume)), so the per-query shuffle is the replication halo,
+    never the table.
 
     Caching contract: with ``stats=None`` the input is persisted and
     registered releasable (see knn_self_join docstring); passing
@@ -64,7 +65,6 @@ def ball_self_join(
         points = mark_releasable(points.persist())
         stats = cell_stats(points, d, cell_col, fine_col)
     stats_bc = spark.sparkContext.broadcast(stats)
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def _edges_kernel(H, hid, Q, qid) -> pd.DataFrame:
         if len(H) <= brute_cutoff:
@@ -82,57 +82,29 @@ def ball_self_join(
         keep = src != dst
         return pd.DataFrame({"src": src[keep], "dst": dst[keep], "dist": di[keep]})
 
-    if strategy == "cogroup":
-        # ALIGNED HOME SIDE (see knn_self_join): only GHOST rows move
-        # through the shuffle; homes are read in place from the
-        # persisted hash(cell)-partitioned layout (Exchange elided).
-        # Ghost volume is boundary-sized (O(surface), not O(volume)),
-        # so at 10^12 rows the per-query shuffle shrinks from the full
-        # table to the replication halo.
-        from ..plans.metrics import counted_fn
+    ghosts = replicate_ghosts(points, stats_bc, radius, cell_col)
+    home_g = points.select(F.col(cell_col).alias("cell"), "id", "vec")
 
-        ghosts = replicate_ghosts(
-            points, stats_bc, radius, cell_col, ghosts_only=True
-        )
-        home_g = points.select(F.col(cell_col).alias("cell"), "id", "vec")
-
-        def per_cell_cg(ghost_pdf: pd.DataFrame, home_pdf: pd.DataFrame) -> pd.DataFrame:
-            if home_pdf.empty:
-                return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
-                    {"src": "int64", "dst": "int64", "dist": "float64"}
-                )
-            H = vec_matrix(home_pdf)
-            hid = home_pdf["id"].to_numpy()
-            if ghost_pdf.empty:
-                Q, qid = H, hid
-            else:
-                G = vec_matrix(ghost_pdf)
-                Q = np.concatenate([H, G])
-                qid = np.concatenate([hid, ghost_pdf["id"].to_numpy()])
-            return _edges_kernel(H, hid, Q, qid)
-
-        return (
-            ghosts.groupby("cell")
-            .cogroup(home_g.groupby("cell"))
-            .applyInPandas(counted_fn(per_cell_cg), schema=EDGE_SCHEMA)
-        )
-
-    assigned = replicate_ghosts(points, stats_bc, radius, cell_col)
-
-    def per_cell(_cell, pdf: pd.DataFrame) -> pd.DataFrame:
-        home = pdf[~pdf["is_ghost"]]
-        if home.empty:
+    def per_cell_cg(ghost_pdf: pd.DataFrame, home_pdf: pd.DataFrame) -> pd.DataFrame:
+        if home_pdf.empty:
             return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
                 {"src": "int64", "dst": "int64", "dist": "float64"}
             )
-        H = vec_matrix(home)
-        hid = home["id"].to_numpy()
-        Q = vec_matrix(pdf)
-        qid = pdf["id"].to_numpy()
+        H = vec_matrix(home_pdf)
+        hid = home_pdf["id"].to_numpy()
+        if ghost_pdf.empty:
+            Q, qid = H, hid
+        else:
+            G = vec_matrix(ghost_pdf)
+            Q = np.concatenate([H, G])
+            qid = np.concatenate([hid, ghost_pdf["id"].to_numpy()])
         return _edges_kernel(H, hid, Q, qid)
 
-    return grouped_apply(assigned, "cell", per_cell, EDGE_SCHEMA, strategy=strategy,
-                         num_partitions=nparts)
+    return (
+        ghosts.groupby("cell")
+        .cogroup(home_g.groupby("cell"))
+        .applyInPandas(counted_fn(per_cell_cg), schema=EDGE_SCHEMA)
+    )
 
 
 def ball_self_join_bin_counts(
@@ -187,12 +159,10 @@ def ball_self_join_bin_counts(
     radii = [float(r) for r in radii]
     rmax = radii[-1]
     m = len(radii)
-    from ..plans.metrics import counted_fn
-
     gsrc = points
     if src_mod2 is not None:
         gsrc = points.where(F.pmod(F.col("id"), F.lit(2)) == int(src_mod2))
-    ghosts = replicate_ghosts(gsrc, stats_bc, rmax, cell_col, ghosts_only=True)
+    ghosts = replicate_ghosts(gsrc, stats_bc, rmax, cell_col)
     home_g = points.select(F.col(cell_col).alias("cell"), "id", "vec")
     schema = ", ".join(f"c{i} bigint" for i in range(m))
 
@@ -281,7 +251,5 @@ def brute_ball_join(points: DataFrame, radius: float) -> DataFrame:
             yield pd.DataFrame(
                 {"src": src[keep], "dst": dst[keep], "dist": np.sqrt(d2[hit][keep])}
             )
-
-    from ..plans.metrics import counted_stream
 
     return points.mapInPandas(counted_stream(scan), schema=EDGE_SCHEMA)

@@ -225,12 +225,12 @@ def _jaccard_pairs_small(lists: DataFrame, min_jaccard_pct: int) -> DataFrame:
 def _jaccard_docs_gate(docs: DataFrame, n: int, max_df: int | None):
     """Direct-from-docs small-path gate: with a df cut, surviving pair
     volume is bounded by n_rows * (max_df - 1) / 2 WITHOUT building
-    the posting lists, so a metadata-cheap doc count gate plus one
-    scan-projection probe (sum of per-doc distinct shingle counts — no
-    shuffle) can justify skipping the groupBy(shingle) exchange
-    entirely. Any 100 TB corpus fails the doc-count gate before the
-    probe scan is even submitted. Returns the (doc_id, sharr) frame
-    when the bounds hold, else None."""
+    the posting lists, so a doc-count gate (``docs.count()``, one full
+    count job) plus one scan-projection probe (sum of per-doc distinct
+    shingle counts — no shuffle) can justify skipping the
+    groupBy(shingle) exchange entirely. Any 100 TB corpus fails the
+    doc-count gate before the probe scan is even submitted. Returns
+    the (doc_id, sharr) frame when the bounds hold, else None."""
     if max_df is None:
         return None
     n_docs = docs.count()
@@ -1210,8 +1210,8 @@ def simhash_neardup_pairs(
     from ..plans.session import mark_releasable
 
     if representation == "groups" and docs.count() <= _SIMHASH_SMALL_SIGS:
-        # distinct signatures <= documents, so a metadata-cheap doc
-        # count gates the bounded one-task groups kernel. The kernel
+        # distinct signatures <= documents, so a doc count (one full
+        # count job) gates the bounded one-task groups kernel. The kernel
         # input is the signature stream behind an EXPLICIT
         # single-partition exchange — NOT persist + coalesce(1): a
         # coalesce over the cached frame collapses the 32-way

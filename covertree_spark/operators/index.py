@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core import covertree as ct
-from ..plans.grouped import grouped_apply
+from ..plans.metrics import counted_fn
 from ..sources.tables import vec_matrix
 
 # CSR arrays and the point block serialize as RAW LITTLE-ENDIAN BYTES
@@ -44,11 +44,17 @@ def build_trees(
     cover: float = ct.DEFAULT_COVER,
     leaf_size: int = ct.DEFAULT_LEAF_SIZE,
     cell_col: str = "cell",
-    strategy: str = "range",
 ) -> DataFrame:
-    """One row per cell: CSR tree + flattened point block + global ids."""
+    """One row per cell: CSR tree + flattened point block + global ids.
 
-    def per_cell(cell, pdf: pd.DataFrame) -> pd.DataFrame:
+    One grouped pandas apply on cell. Over an aligned layout (input
+    partitioned by cell and sorted by cell within partitions, e.g.
+    ``queries._align``) it plans with no Exchange and no Sort, so the
+    catalog's index builds stay shuffle-free; any other input pays one
+    hash Exchange and is still grouped correctly."""
+
+    def per_cell(key, pdf):  # no hints: PySpark infers the UDF type from them
+        (cell,) = key
         X = vec_matrix(pdf)
         tree = ct.build(X, cover=cover, leaf_size=leaf_size)
         # per-cell pruning stats ride with the index row, so queries
@@ -83,12 +89,11 @@ def build_trees(
             }
         )
 
-    return grouped_apply(
-        points.select(cell_col, "id", "vec").withColumnRenamed(cell_col, "cell"),
-        "cell",
-        per_cell,
-        TREE_SCHEMA,
-        strategy=strategy,
+    return (
+        points.select(cell_col, "id", "vec")
+        .withColumnRenamed(cell_col, "cell")
+        .groupBy("cell")
+        .applyInPandas(counted_fn(per_cell), schema=TREE_SCHEMA)
     )
 
 

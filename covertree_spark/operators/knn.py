@@ -12,9 +12,11 @@ partition cover trees"):
     the true kth distance; candidate cells = {c : lb_c <= ub}.
     Emits (cell, qid, vec, rq=ub) — the cell-cover prune.
 
-  phase 2 (grouped_apply, ONE repartitionByRange shuffle): per cell,
-    build the cover tree over home points, run a radius query at each
-    query's rq, keep the k best per query locally.
+  phase 2 (cogrouped applyInPandas on cell): only the candidate
+    stream shuffles; the home side is read in place from the aligned
+    hash(cell) layout. Per cell: the exact local top-k of each
+    candidate query against the home points (cover tree, or chunked
+    brute force for small cells), with its rq as the initial bound.
 
   merge: global top-k per query by (dist, id) via a window — exact
     because every point closer than the kth distance lives in a
@@ -31,7 +33,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..core import covertree as ct
-from ..plans.grouped import grouped_apply
 from ..plans.metrics import counted_fn, counted_stream
 from ..plans.session import mark_releasable
 from ..sources.tables import vec_matrix
@@ -101,8 +102,8 @@ def _cell_knn_kernel(
     brute_cutoff: int,
 ) -> pd.DataFrame:
     """Per-cell exact kNN of the candidate block ``qs`` against the
-    home block (H, hid). Shared by the union-shuffle, cogroup and
-    persisted-index paths — one kernel, three physical plans."""
+    home block (H, hid). Shared by the cogroup and persisted-index
+    paths — one kernel, two physical plans."""
     Q = _cand_matrix(qs, H, hid)
     qids = qs["qid"].to_numpy()
     rq = qs["rq"].to_numpy()
@@ -133,7 +134,6 @@ def knn_self_join(
     d: int,
     cover: float = ct.DEFAULT_COVER,
     leaf_size: int = ct.DEFAULT_LEAF_SIZE,
-    strategy: str = "cogroup",
     cell_col: str = "cell",
     fine_col: str | None = None,
     queries: DataFrame | None = None,
@@ -146,13 +146,10 @@ def knn_self_join(
     default: queries = points, self-pairs excluded). Returns
     (src, dst, rank, dist) with rank 1..k ordered by (dist, dst).
 
-    ``strategy`` (identical results, A/B'd at sf0.1 on local[32],
-    warm seconds over 3 runs): "cogroup" 1.8-2.1 — candidates-only
-    shuffle against the aligned home layout, the default and the only
-    shape whose shuffle volume is independent of table size;
-    "range" 2.3-2.5 — one repartitionByRange of home+candidates (pays
-    a sampling job + candidate persist); "hash_shuffle" 2.3-5.1 — same
-    union through a hash repartition.
+    One physical plan: the phase-1 candidate stream is cogrouped with
+    the home table on cell, so only candidates shuffle — the shuffle
+    volume is independent of table size. On the aligned layout (see
+    ``queries._align``) the home side's Exchange is elided.
 
     Caching contract: when ``stats`` is None the input is persisted
     (three downstream scans) and registered with
@@ -169,15 +166,12 @@ def knn_self_join(
     if len(stats.cell_ids) > 128 and stats.coarse_of is None:
         stats = stats.with_hierarchy(n_coarse=64)
     stats_bc = spark.sparkContext.broadcast(stats)
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     qdf = queries if queries is not None else points
     self_join = queries is None
     need = k + 1 if self_join else k  # +1 absorbs the self-hit
     phase1 = make_phase1(stats_bc, need)
-    # no persist: with the cogroup/hash_shuffle strategies phase 1
-    # streams straight into the ONE explicit shuffle (a range
-    # partitioner would sample the input in an extra job, forcing a
-    # ~row-sized persist of the candidate set).
+    # no persist: phase 1 streams straight into the cogroup's
+    # candidate-side shuffle.
     # Self-join phase 1 also sees each query's HOME cell so the
     # candidate row targeting it ships a NULL vec (see _cand_matrix) —
     # the dominant shuffle payload drops to the foreign-cell fringe.
@@ -187,67 +181,34 @@ def knn_self_join(
     candidates = qdf.select(*qcols).mapInPandas(
         counted_stream(phase1, emit_bytes=True), schema=CAND_SCHEMA
     )
-    if strategy == "range":
-        candidates = mark_releasable(candidates.persist())
+    # ALIGNED HOME SIDE: the home table never re-shuffles. The
+    # cogrouped pandas apply requires hash(cell) on both children;
+    # when ``points`` is already persisted hash-partitioned on
+    # ``cell_col`` with spark.sql.shuffle.partitions partitions
+    # (the catalog's prepared layout — the ONE ingest shuffle),
+    # EnsureRequirements elides the home-side Exchange and ONLY
+    # the candidate stream moves (InMemoryTableScan -> Sort with no
+    # Exchange; pinned by tests/test_plan_contracts_r5.py).
+    home_g = points.select(F.col(cell_col).alias("cell"), "id", "vec")
 
-    if strategy == "cogroup":
-        # ALIGNED HOME SIDE: the home table never re-shuffles. The
-        # cogrouped pandas apply requires hash(cell) on both children;
-        # when ``points`` is already persisted hash-partitioned on
-        # ``cell_col`` with spark.sql.shuffle.partitions partitions
-        # (the catalog's prepared layout — the ONE ingest shuffle),
-        # EnsureRequirements elides the home-side Exchange and ONLY
-        # the candidate stream moves (verified by .explain:
-        # InMemoryTableScan -> Sort with no Exchange). This kills the
-        # full-table home shuffle per query batch — the round-2
-        # VERDICT's #2 scale defect: at 10^12 rows the union path
-        # re-shuffled every home byte per invocation.
-        home_g = points.select(F.col(cell_col).alias("cell"), "id", "vec")
-
-        def per_cell_cg(cand_pdf: pd.DataFrame, home_pdf: pd.DataFrame) -> pd.DataFrame:
-            if cand_pdf.empty or home_pdf.empty:
-                return pd.DataFrame(
-                    {c: [] for c in _PART_EMPTY_TYPES}
-                ).astype(_PART_EMPTY_TYPES)
-            H = vec_matrix(home_pdf)
-            hid = home_pdf["id"].to_numpy()
-            return _cell_knn_kernel(
-                H, hid, cand_pdf, k, self_join, cover, leaf_size, brute_cutoff
-            )
-
-        parts = (
-            candidates.groupby("cell")
-            .cogroup(home_g.groupby("cell"))
-            .applyInPandas(counted_fn(per_cell_cg), schema=PART_SCHEMA)
-        )
-        return _merge_topk(parts, k, _merge_mode(stats, k, merge, nq=n_queries))
-
-    home = points.select(F.col(cell_col).alias("cell"), "id", "vec")
-    tagged_home = home.select(
-        "cell", F.col("id").alias("qid"), "vec", F.lit(float("nan")).alias("rq"),
-        F.lit(0).cast("int").alias("ncand"), F.lit(False).alias("is_query"),
-    )
-    tagged_q = candidates.select(
-        "cell", "qid", "vec", "rq", "ncand", F.lit(True).alias("is_query")
-    )
-    assigned = tagged_home.unionByName(tagged_q)
-
-    def per_cell(_cell, pdf: pd.DataFrame) -> pd.DataFrame:
-        homes = pdf[~pdf["is_query"]]
-        qs = pdf[pdf["is_query"]]
-        if homes.empty or qs.empty:
+    def per_cell_cg(cand_pdf: pd.DataFrame, home_pdf: pd.DataFrame) -> pd.DataFrame:
+        if cand_pdf.empty or home_pdf.empty:
             return pd.DataFrame(
                 {c: [] for c in _PART_EMPTY_TYPES}
             ).astype(_PART_EMPTY_TYPES)
-        H = vec_matrix(homes)
-        hid = homes["qid"].to_numpy()  # home rows carry their point id in qid
+        H = vec_matrix(home_pdf)
+        hid = home_pdf["id"].to_numpy()
         return _cell_knn_kernel(
-            H, hid, qs, k, self_join, cover, leaf_size, brute_cutoff
+            H, hid, cand_pdf, k, self_join, cover, leaf_size, brute_cutoff
         )
 
-    parts = grouped_apply(assigned, "cell", per_cell, PART_SCHEMA, strategy=strategy,
-                          num_partitions=nparts)
+    parts = (
+        candidates.groupby("cell")
+        .cogroup(home_g.groupby("cell"))
+        .applyInPandas(counted_fn(per_cell_cg), schema=PART_SCHEMA)
+    )
     return _merge_topk(parts, k, _merge_mode(stats, k, merge, nq=n_queries))
+
 
 
 # below this many expected partial rows (~n x k), the one-pass window

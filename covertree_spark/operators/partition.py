@@ -463,18 +463,15 @@ def replicate_ghosts(
     stats_bc,
     radius: float,
     cell_col: str = "cell",
-    ghosts_only: bool = False,
 ) -> DataFrame:
-    """Boundary replication: emit (cell, id, vec, is_ghost) rows — the
-    home row plus one ghost row per foreign cell whose lower bound
-    <= radius. Exactness: if d(p,q) <= r and q is home in cell c, then
-    lb_c(p) <= d(p,q) <= r, so p is replicated into c (reference ghost
-    guarantee, dist_point_vector.cpp:583-596, with the tighter
-    centroid/circumradius bound).
-
-    ``ghosts_only=True`` suppresses the home rows — the cogroup ball
-    join reads homes from the already-partitioned input instead of
-    pushing every home byte back through the shuffle."""
+    """Boundary replication: emit one (cell, id, vec) ghost row per
+    foreign cell whose lower bound <= radius. Exactness: if
+    d(p,q) <= r and q is home in cell c, then lb_c(p) <= d(p,q) <= r,
+    so p is replicated into c (reference ghost guarantee,
+    dist_point_vector.cpp:583-596, with the tighter centroid/
+    circumradius bound). Home rows are not emitted: the cogroup joins
+    read homes from the already-partitioned input instead of pushing
+    every home byte back through the shuffle."""
 
     def dilate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         st: CellStats = stats_bc.value
@@ -491,53 +488,33 @@ def replicate_ghosts(
                 yield from _dilate_chunk(st, coarse, stride, pdf)
 
     def _dilate_chunk(st, coarse, stride, pdf):
-            from ..core.covertree import pairwise_sq_dists
+        from ..core.covertree import pairwise_sq_dists
 
-            X = vec_matrix(pdf)
-            home = pdf[cell_col].to_numpy()
-            n = len(pdf)
-            # lb <= r  <=>  d2 <= (r + circ)^2 : one GEMM + one compare,
-            # no sqrt pass over the big matrix (memory-bandwidth-bound).
-            # 1e-9 relative slack: bounds carry float noise; replication
-            # must be a superset (the per-cell query re-filters exactly).
-            d2 = pairwise_sq_dists(X, st.centroids)
-            thr = radius * (1.0 + 1e-9) + st.circumradii
-            cand = (d2 <= (thr * thr)[None, :]) & (coarse[None, :] != home[:, None])
-            pi, ej = np.nonzero(cand)
-            if ghosts_only:
-                out_home = None
-            else:
-                out_home = pd.DataFrame(
-                    {
-                        "cell": home.astype(np.int64),
-                        "id": pdf["id"].to_numpy(),
-                        "vec": pdf["vec"].to_numpy(),
-                        "is_ghost": np.zeros(n, dtype=bool),
-                    }
-                )
-            if len(pi):
-                # dedupe (point, partition-cell): several fine entries
-                # may map to the same coarse cell
-                key = pi.astype(np.int64) * stride + coarse[ej]
-                uk = np.unique(key)
-                pi2 = uk // stride
-                tgt = uk % stride
-                out_ghost = pd.DataFrame(
-                    {
-                        "cell": tgt,
-                        "id": pdf["id"].to_numpy()[pi2],
-                        "vec": pdf["vec"].to_numpy()[pi2],
-                        "is_ghost": np.ones(len(pi2), dtype=bool),
-                    }
-                )
-                if out_home is None:
-                    yield out_ghost
-                else:
-                    yield pd.concat([out_home, out_ghost], ignore_index=True)
-            elif out_home is not None:
-                yield out_home
+        X = vec_matrix(pdf)
+        home = pdf[cell_col].to_numpy()
+        # lb <= r  <=>  d2 <= (r + circ)^2 : one GEMM + one compare,
+        # no sqrt pass over the big matrix (memory-bandwidth-bound).
+        # 1e-9 relative slack: bounds carry float noise; replication
+        # must be a superset (the per-cell query re-filters exactly).
+        d2 = pairwise_sq_dists(X, st.centroids)
+        thr = radius * (1.0 + 1e-9) + st.circumradii
+        cand = (d2 <= (thr * thr)[None, :]) & (coarse[None, :] != home[:, None])
+        pi, ej = np.nonzero(cand)
+        if len(pi):
+            # dedupe (point, partition-cell): several fine entries
+            # may map to the same coarse cell
+            key = pi.astype(np.int64) * stride + coarse[ej]
+            uk = np.unique(key)
+            pi2 = uk // stride
+            yield pd.DataFrame(
+                {
+                    "cell": uk % stride,
+                    "id": pdf["id"].to_numpy()[pi2],
+                    "vec": pdf["vec"].to_numpy()[pi2],
+                }
+            )
 
-    schema = "cell bigint, id bigint, vec array<float>, is_ghost boolean"
+    schema = "cell bigint, id bigint, vec array<float>"
     return points.mapInPandas(
         counted_stream(dilate, emit_bytes=True), schema=schema
     )

@@ -90,7 +90,7 @@ def build_delta_trees(
         .repartition(nparts, F.col("cell"))
         .sortWithinPartitions("cell")
     )
-    return build_trees(pts, d=d, strategy="aligned")
+    return build_trees(pts, d=d)
 
 
 def upsert_index(

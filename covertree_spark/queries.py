@@ -199,9 +199,10 @@ def _align(pts: DataFrame, bucketed: bool = False) -> DataFrame:
     never the table (round-2 VERDICT defect #2).
 
     sortWithinPartitions: whole contiguous cell groups per partition,
-    so index construction over this layout runs strategy="aligned"
-    (zero additional shuffle); the intra-partition sort preserves the
-    hash outputPartitioning the cogroup elision depends on.
+    so ``build_trees``' grouped apply over this layout plans with no
+    Exchange and no Sort (zero additional shuffle); the intra-partition
+    sort preserves the hash outputPartitioning the cogroup elision
+    depends on.
 
     ``bucketed=True``: the input is a bucket-aware snapshot scan whose
     hashpartitioning(cell, nparts) already satisfies the layout
@@ -2398,13 +2399,13 @@ def _geo_index(spark, sf_dir):
         # committed snapshots from older code are never resumed
         snap = snapshot_id("geo_trees", [psnap], {"d": 3, "v": INDEX_V})
         nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        # aligned: the prepared layout already co-locates whole cells;
-        # the snapshot itself is BUCKETED at rest, so both this
-        # session's read-back and every future session's resume are
-        # hash-partitioned straight off the scan — no tree-blob
-        # re-shuffle anywhere (round-4 VERDICT #3)
+        # the prepared layout already co-locates whole, sorted cells,
+        # so the tree build runs shuffle-free; the snapshot itself is
+        # BUCKETED at rest, so both this session's read-back and every
+        # future session's resume are hash-partitioned straight off the
+        # scan — no tree-blob re-shuffle anywhere (round-4 VERDICT #3)
         trees = wh.checkpoint(
-            build_trees(pts, d=3, strategy="aligned"), "geo_trees", snap,
+            build_trees(pts, d=3), "geo_trees", snap,
             bucket=("cell", nparts),
         )
         spec = wh.bucket_spec("geo_trees", snap)
@@ -2471,7 +2472,7 @@ def _geo_chain(spark, sf_dir):
         wh.checkpoint(base, "geochain_points", bsnap, bucket=("cell", nparts))
         btsnap = snapshot_id("geochain_trees", [bsnap], {"d": 3, "v": INDEX_V})
         wh.checkpoint(
-            build_trees(base, d=3, strategy="aligned"),
+            build_trees(base, d=3),
             "geochain_trees",
             btsnap,
             bucket=("cell", nparts),
@@ -5761,10 +5762,13 @@ FUZZY_PREFIX = 24  # ASCII-normalized key length for the edit-distance join
 
 # Data-adaptive gate for the fuzzy join's bounded one-task path: at
 # the cutoff the task holds <= (FUZZY_PREFIX + 1) * 1M variant
-# strings; candidate pairs are emitted and verified run-by-run so the
-# transient stays bounded by the largest variant group — the same
-# worst case the distributed expansion has (no df cut by design, the
-# oracle is the pure definition).
+# strings. The candidate pairs of EVERY posting run are concatenated
+# and deduplicated before the verify, so the transient memory is the
+# TOTAL candidate-pair count across all runs (sum of C(m, 2) over
+# variant groups of size m) — which this doc-count gate does not
+# bound: a duplicate-heavy corpus can put most docs in one run. The
+# distributed expansion emits the same pairs, spread over tasks (no
+# df cut by design, the oracle is the pure definition).
 _FUZZY_SMALL_DOCS = 1_000_000
 
 
@@ -5794,11 +5798,15 @@ def _is_edit1(sa: str, sb: str) -> bool:
 def _fuzzy_join_small(p):
     """Bounded single-task FastSS join over (id, s): deletion
     variants, posting runs, i<j candidate expansion, exact d<=1
-    verify. Identical output to the distributed expansion."""
+    verify. Identical output to the distributed expansion: NULL keys
+    are dropped at entry, as the distributed explode of a NULL
+    variant list drops them (and levenshtein(NULL, x) is NULL in the
+    oracle)."""
     import pandas as pd
 
     def run(batches):
-        blocks = [b for b in batches if not b.empty]
+        blocks = [b[b["s"].notna()] for b in batches]
+        blocks = [b for b in blocks if not b.empty]
         if not blocks:
             return
         ids = np.concatenate([b["id"].to_numpy(np.int64) for b in blocks])
@@ -5806,7 +5814,6 @@ def _fuzzy_join_small(p):
         v_doc: list[int] = []
         v_str: list[str] = []
         for di, s in enumerate(strs):
-            s = s or ""
             vs = {s}
             for i in range(len(s)):
                 vs.add(s[:i] + s[i + 1 :])

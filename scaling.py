@@ -18,8 +18,8 @@ its real datasets), d=32.
 
   build : per-cell cover-tree construction over a 31k-points-per-cell
           Voronoi layout, reading the pre-partitioned cached input
-          (strategy="aligned": the one ingest shuffle is amortized, as
-          in any production layout) and persisting CSR trees.
+          (no re-shuffle: the one ingest shuffle is amortized, as in
+          any production layout) and persisting CSR trees.
   knn   : exact k=10 self-join over a 3.9k-points-per-cell layout —
           full two-phase plan including its candidate shuffle + merge.
 
@@ -120,11 +120,11 @@ t_build = float("inf")
 t_persist = float("inf")
 for rep in range(reps):
     t0 = time.time()
-    trees = build_trees(pts_build, d=d, strategy="aligned")
+    trees = build_trees(pts_build, d=d)
     trees.count()
     t_build = min(t_build, time.time() - t0)
     t0 = time.time()
-    build_trees(pts_build, d=d, strategy="aligned").write.mode(
+    build_trees(pts_build, d=d).write.mode(
         "overwrite").parquet(out + f"/trees_{{cpus}}")
     t_persist = min(t_persist, time.time() - t0)
 trees_rows = spark.read.parquet(out + f"/trees_{{cpus}}").count()

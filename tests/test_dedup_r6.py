@@ -170,18 +170,36 @@ def test_neardup_groups_fused_matches_distributed(spark, docs, monkeypatch):
     assert any(r[2] == 0 for r in fused)  # non-trivial clusters exist
 
 
-def test_fuzzy_join_small_matches_distributed(spark, monkeypatch):
+def test_fuzzy_join_small_matches_distributed(spark, monkeypatch, tmp_path):
     """r6 dial parity: the bounded one-task FastSS join == the
-    posting-list expansion + JVM levenshtein verify."""
+    posting-list expansion + JVM levenshtein verify — on the sf0.01
+    corpus, and on that corpus plus NULL and empty texts (NULL keys
+    pair with nothing; empty keys pair with each other at d=0)."""
     from covertree_spark import queries as Q
 
     sf = "/root/testdata/sf0.01"
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    extra = spark.createDataFrame(
+        [
+            (10_000 + i, t, "en", "web", 0)
+            for i, t in enumerate([None, None, "", "", "!!", "a", "ab"])
+        ],
+        docs.schema,
+    )
+    nulls = str(tmp_path / "nulls")
+    docs.unionByName(extra).write.parquet(f"{nulls}/documents.parquet")
+
     fn = Q.catalog()["fuzzy_join"][0]
-    small = sorted(map(tuple, fn(spark, sf).collect()))
-    monkeypatch.setattr(Q, "_FUZZY_SMALL_DOCS", -1)
-    dist = sorted(map(tuple, fn(spark, sf).collect()))
-    assert len(small) > 0
-    assert small == dist
+    cutoff = Q._FUZZY_SMALL_DOCS
+    for sf_dir in (sf, nulls):
+        monkeypatch.setattr(Q, "_FUZZY_SMALL_DOCS", cutoff)
+        small = sorted(map(tuple, fn(spark, sf_dir).collect()))
+        monkeypatch.setattr(Q, "_FUZZY_SMALL_DOCS", -1)
+        dist = sorted(map(tuple, fn(spark, sf_dir).collect()))
+        assert len(small) > 0
+        assert small == dist
+    assert (10_002, 10_003, 0) in small
+    assert not any({10_000, 10_001} & {a, b} for a, b, _d in small)
 
 
 def test_minhash_cand_kernel_matches_banding_join(spark):

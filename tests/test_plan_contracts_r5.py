@@ -105,3 +105,124 @@ def test_cell_cover_union_equals_base_and_disjoint(spark):
     }
     assert expanded == base
     assert len(rows) < len(base)  # it actually coarsened
+
+
+def _children(node):
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _physical(df):
+    """The physical plan after EnsureRequirements (AQE's current plan,
+    before any runtime re-optimization)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan
+
+
+def _find(node, name):
+    if node.nodeName() == name:
+        return node
+    for child in _children(node):
+        hit = _find(child, name)
+        if hit is not None:
+            return hit
+    return None
+
+
+def _node_names(node):
+    """Node names of the subtree. InMemoryTableScan is a leaf here, so
+    a persisted layout's own ingest Exchange is not counted."""
+    names = [node.nodeName()]
+    for child in _children(node):
+        names += _node_names(child)
+    return names
+
+
+def test_cogroup_home_side_reads_aligned_layout_in_place(spark):
+    """kNN and ball join cogroup the candidate/ghost stream with the
+    home table. Over the aligned hash(cell) layout the home side is the
+    cached scan with no Exchange; only the candidate side shuffles."""
+    from covertree_spark.operators.ball_join import ball_self_join
+    from covertree_spark.operators.knn import knn_self_join
+    from covertree_spark.queries import _geo_points
+
+    pts, stats = _geo_points(spark, SF_TINY)
+    for out in (
+        knn_self_join(pts, k=5, d=3, stats=stats),
+        ball_self_join(pts, 0.28, d=3, stats=stats),
+    ):
+        cg = _find(_physical(out), "FlatMapCoGroupsInPandas")
+        assert cg is not None
+        cand, home = (_node_names(c) for c in _children(cg))
+        assert "InMemoryTableScan" in home
+        assert not any("Exchange" in n for n in home), home
+        assert any("Exchange" in n for n in cand), cand
+
+
+def test_build_trees_over_aligned_layout_has_no_exchange(spark):
+    """The index build is one grouped apply; over the aligned layout
+    (hash(cell) partitioned, sorted by cell) it needs neither an
+    Exchange nor a Sort, so warehouse index builds stay shuffle-free."""
+    from covertree_spark.operators.index import build_trees
+    from covertree_spark.queries import _geo_points
+
+    pts, _stats = _geo_points(spark, SF_TINY)
+    names = _node_names(_physical(build_trees(pts, d=3)))
+    assert "FlatMapGroupsInPandas" in names
+    assert "InMemoryTableScan" in names
+    assert not any("Exchange" in n for n in names), names
+    assert "Sort" not in names, names
+
+
+def test_build_trees_same_cells_for_unaligned_input(spark):
+    """Unaligned input pays one hash Exchange and is still grouped
+    whole: one row per cell, holding the same points as the aligned
+    build (row order within a cell follows the input, so compare the
+    point blocks by id)."""
+    import numpy as np
+
+    from covertree_spark.operators.index import build_trees, tree_from_row
+    from covertree_spark.queries import _geo_points
+
+    pts, _stats = _geo_points(spark, SF_TINY)
+    shuffled = pts.repartition(3)
+    assert any(
+        "Exchange" in n for n in _node_names(_physical(build_trees(shuffled, d=3)))
+    )
+
+    def by_cell(df):
+        rows = df.collect()
+        cells = [r["cell"] for r in rows]
+        assert len(cells) == len(set(cells)), "a cell was split"
+        out = {}
+        for r in rows:
+            _tree, X, ids = tree_from_row(r)
+            order = np.argsort(ids)
+            out[r["cell"]] = (r["n"], ids[order], X[order], r["ptype"])
+        return out
+
+    aligned = by_cell(build_trees(pts, d=3))
+    unaligned = by_cell(build_trees(shuffled, d=3))
+    assert aligned.keys() == unaligned.keys()
+    for cell, (n, ids, X, ptype) in aligned.items():
+        n2, ids2, X2, ptype2 = unaligned[cell]
+        assert (n, ptype) == (n2, ptype2)
+        assert np.array_equal(ids, ids2)
+        assert np.array_equal(X, X2)
+
+
+def test_build_trees_feeds_metrics(spark, monkeypatch):
+    """The index build meters its distance work and kernel wall time
+    into plans.metrics, like every other cell operator."""
+    from covertree_spark.operators.index import build_trees
+    from covertree_spark.plans import metrics
+    from covertree_spark.queries import _geo_points
+
+    pts, _stats = _geo_points(spark, SF_TINY)
+    monkeypatch.setattr(metrics, "_CURRENT", metrics._CURRENT)  # restored after
+    meters = metrics.install(spark)
+    build_trees(pts, d=3).count()
+    assert meters.value > 0
+    assert meters.udf_wall > 0

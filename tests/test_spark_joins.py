@@ -46,17 +46,6 @@ def test_geo_ball_join_matches_bruteforce(spark, geo_points, geo_numpy):
     assert got == expected
 
 
-@pytest.mark.parametrize("strategy", ["hash", "hash_shuffle", "range", "cogroup"])
-def test_geo_ball_join_strategy_parity(spark, geo_points, geo_numpy, strategy):
-    """Every physical strategy — including the aligned cogroup plan
-    that shuffles only ghosts — must produce the identical edge set."""
-    X, ids = geo_numpy
-    got = edges_set(ball_self_join(geo_points, GEO_R, d=3, strategy=strategy))
-    exp = brute_ball_edges(X, GEO_R)
-    expected = sorted((int(ids[s]), int(ids[t])) for s, t in exp)
-    assert got == expected
-
-
 def test_voronoi_centers_exact_matches_numpy(spark):
     """The distributed-argmax Gonzalez (reference O1/A2 parity path)
     must pick exactly the centers the same greedy picks over the full
@@ -80,24 +69,6 @@ def test_voronoi_centers_exact_matches_numpy(spark):
         cs.append(X[far])
         mind = np.minimum(mind, dists_to(X, X[far]))
     assert np.array_equal(got, np.stack(cs))
-
-
-@pytest.mark.parametrize("strategy", ["hash_shuffle", "range", "cogroup"])
-def test_geo_knn_strategy_parity(spark, geo_points, geo_numpy, strategy):
-    X, ids = geo_numpy
-    k = 5
-    got = knn_self_join(geo_points, k=k, d=3, strategy=strategy)
-    rows = sorted(
-        (r["src"], r["rank"], r["dst"])
-        for r in got.select("src", "rank", "dst").collect()
-    )
-    eq, ep, ed = brute_knn(X, X, k, exclude_self_idx=np.arange(len(X)))
-    expected = []
-    rank = {}
-    for q, p, _d in zip(eq, ep, ed):
-        rank[q] = rank.get(q, 0) + 1
-        expected.append((int(ids[q]), rank[q], int(ids[p])))
-    assert rows == sorted(expected)
 
 
 def test_geo_ball_join_matches_distributed_bf(spark, geo_points):

@@ -1,10 +1,8 @@
-"""Structured-streaming ingest parity + multimodal plumbing."""
+"""Structured-streaming ingest parity with the batch catalog."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-from covertree_spark.functions import multimodal as mm
 from covertree_spark.sources.pages import generate_pages
 from covertree_spark.streaming.ingest import run_ingest, stream_points
 
@@ -33,48 +31,6 @@ def test_stream_ingest_matches_batch(spark, tmp_path):
     ).write.mode("append").parquet(src)
     run_ingest(spark, src, dst, ckpt, res=4)
     assert spark.read.parquet(dst).count() == 400
-
-
-def test_image_metadata_plumbing(spark):
-    pages = generate_pages(spark, 50, partitions=2)
-    meta = mm.image_metadata(pages).collect()
-    assert len(meta) == 50
-    r = meta[0]
-    assert 64 <= r["width"] < 256 and r["channels"] == 3
-    assert len(r["content_sha256"]) == 64
-    # deterministic across runs
-    meta2 = mm.image_metadata(pages).collect()
-    assert sorted((m["id"], m["width"]) for m in meta) == sorted(
-        (m["id"], m["width"]) for m in meta2
-    )
-
-
-def test_image_features_shape_and_norm(spark):
-    pages = generate_pages(spark, 30, partitions=2)
-    feats = mm.image_features(pages, d=16).collect()
-    assert len(feats) == 30
-    for r in feats[:5]:
-        v = np.asarray(r["feat"], dtype=np.float32)
-        assert v.shape == (16,)
-        assert abs(float(np.linalg.norm(v)) - 1.0) < 1e-5
-
-
-def test_frame_sample_plan(spark):
-    pages = generate_pages(spark, 20, partitions=2)
-    rows = mm.frame_sample_plan(pages, every_n=10).collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r["id"], []).append(r["frame_idx"])
-    assert len(by_id) == 20
-    for fr in by_id.values():
-        assert fr == sorted(fr)
-        assert all(f % 10 == 0 for f in fr)
-
-
-def test_real_mode_raises(spark):
-    pages = generate_pages(spark, 5, partitions=1)
-    with pytest.raises(Exception, match="NotImplementedError|real image"):
-        mm.image_metadata(pages, deterministic_fake=False).collect()
 
 
 def test_stream_dedup_matches_batch(spark, tmp_path):
