@@ -2914,102 +2914,32 @@ def q_user_trips(spark, sf_dir):
     into trips at a long dwell (time gap > 6h) OR a discontinuity
     (great-circle jump > 9000 km) — sessionization where the break
     predicate needs the geometry, not just the clock. Per (user, trip):
-    leg count and integer-metre trip length. The trip index is a
-    per-user prefix sum of break flags computed with the same two-phase
-    bucket plan as sessionize (sessions.prefix_starts) — no task ever
-    holds a full user history, breaks are integer-exact comparisons on
-    engine-shared integers.
-
-    Below the session family's SMALL_CUTOFF the whole query fuses
-    into ONE per-user window (r6): lag gives the predecessor, the
-    JVM integer haversine (bit-identical to the numpy kernel —
-    nn_event's r6 discipline) gives the jump, and the running break
-    sum gives the trip index — two exchanges instead of the pair
-    window + Python segment kernel + event-keyed stitch join + prefix
-    window (the hot-key contract holds trivially under the cutoff;
-    parity pinned by tests/test_sessions_r6.py)."""
-    ev = src.load_table(spark, sf_dir, "events")
-    n_ev = ev.count()  # adaptive-dial probe, shared with prefix_starts
-    if n_ev <= sessions.SMALL_CUTOFF:
-        from pyspark.sql import Window
-
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("us").asc(), F.col("event_id").asc()
-        )
-        lon1, lat1 = geometry.sql_lonlat_exprs("prev_id")
-        lon2, lat2 = geometry.sql_lonlat_exprs("event_id")
-        m = F.expr(geometry.sql_haversine_m_int(lon1, lat1, lon2, lat2))
-        lagged = (
-            ev.select("event_id", "user_id", us.alias("us"))
-            .withColumn("prev_id", F.lag("event_id").over(w))
-            .withColumn("prev_us", F.lag("us").over(w))
-            .withColumn("m", m)
-        )
-        brk = (
-            F.col("prev_id").isNull()
-            | ((F.col("us") - F.col("prev_us")) > F.lit(TRIP_GAP_US))
-            | (F.col("m") > F.lit(TRIP_JUMP_M))
-        )
-        flagged = lagged.select(
-            "user_id",
-            "us",
-            "event_id",
-            F.when(brk, F.lit(0)).otherwise(F.col("m")).alias("seg_m"),
-            F.when(brk, F.lit(1)).otherwise(F.lit(0)).alias("st"),
-        )
-        trips = flagged.withColumn(
-            "trip",
-            F.sum("st")
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("bigint"),
-        )
-        return trips.groupBy("user_id", "trip").agg(
-            F.count("*").alias("n_events"),
-            F.sum("seg_m").alias("trip_m"),
-        )
-    pairs = sessions.consecutive_pairs(
-        ev, bucket_us=TRAVEL_BUCKET_US, n_hint=n_ev
+    leg count and integer-metre trip length. The trip index is the
+    session family's per-user run operator (sessions.runs) with the
+    jump in its break predicate — the JVM integer haversine
+    (bit-identical to the numpy kernel) of each event and its
+    predecessor — so no task ever holds a full user history above the
+    family's cutoff, and breaks are integer-exact comparisons on
+    engine-shared integers."""
+    lon, lat = geometry.sql_lonlat_exprs("event_id")
+    ev = src.load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts",
+        F.expr(lon).alias("lon"), F.expr(lat).alias("lat"),
     )
-    # a leg = a consecutive pair that does NOT break; every other
-    # event (no predecessor, long dwell, or jump) starts a trip.
-    # JVM integer haversine (r6) — no Python stage in the pair stream.
-    lon1, lat1 = geometry.sql_lonlat_exprs("prev_id")
-    lon2, lat2 = geometry.sql_lonlat_exprs("event_id")
-    legs = (
-        pairs.select(
-            "event_id",
-            "us",
-            "prev_us",
-            F.expr(
-                geometry.sql_haversine_m_int(lon1, lat1, lon2, lat2)
-            ).alias("m"),
-        )
-        .filter(
-            ((F.col("us") - F.col("prev_us")) <= F.lit(TRIP_GAP_US))
-            & (F.col("m") <= F.lit(TRIP_JUMP_M))
-        )
-        .select("event_id", "m")
+    # lon/lat are derived once per event and lagged with it: the
+    # haversine runs twice per event (break flag, leg length), the id
+    # hash only once
+    m = F.expr(
+        geometry.sql_haversine_m_int("prev_lon", "prev_lat", "lon", "lat")
     )
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    flagged = (
-        ev.select("event_id", "user_id", us.alias("us"))
-        .join(legs, "event_id", "left")
-        .select(
-            "event_id",
-            "user_id",
-            "us",
-            F.coalesce("m", F.lit(0)).alias("seg_m"),
-            F.when(F.col("m").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("st"),
-        )
+    brk = ((F.col("us") - F.col("prev_us")) > F.lit(TRIP_GAP_US)) | (
+        m > F.lit(TRIP_JUMP_M)
     )
-    # flagged is ev left-joined 1:1 — its cardinality IS the event count
-    trips = sessions.prefix_starts(
-        flagged, bucket_us=TRAVEL_BUCKET_US, n_hint=n_ev
-    )
-    return trips.groupBy("user_id", "trip").agg(
+    trips = sessions.runs(ev, ["us", "lon", "lat"], brk, TRAVEL_BUCKET_US)
+    # a leg = an event that continues its trip; its length is the jump
+    return trips.groupBy("user_id", F.col("run").alias("trip")).agg(
         F.count("*").alias("n_events"),
-        F.sum("seg_m").alias("trip_m"),
+        F.sum(F.when(F.col("st") == 1, F.lit(0)).otherwise(m)).alias("trip_m"),
     )
 
 
@@ -3441,87 +3371,23 @@ def q_stay_points(spark, sf_dir):
     """STAY-POINT detection (Li et al., GIS'08): maximal runs of
     consecutive same-cell pings with no intra-run silence over 12 h;
     a run is a stay if it spans >= 2 pings and >= 1 h of dwell.
-    Composition is entirely engine primitives — the hot-key-bounded
-    pair stream (sessions.consecutive_pairs), the shared SQL cell
-    codec on BOTH endpoints (pure JVM), break flags, and the same
-    two-phase prefix sum as trip segmentation (sessions.prefix_starts)
-    — so no task ever holds a full user history. Dwell is an integer
-    microsecond difference of engine-shared integers: exact."""
-    ev = src.load_table(spark, sf_dir, "events")
-    n_ev = ev.count()  # adaptive-dial probe, shared with prefix_starts
+    Composition is entirely engine primitives — the shared SQL cell
+    codec (pure JVM) and the session family's per-user run operator
+    (sessions.runs) breaking on a cell change or a long silence — so
+    no task ever holds a full user history above the family's cutoff.
+    Dwell is an integer microsecond difference of engine-shared
+    integers: exact."""
     lon_e, lat_e = geometry.sql_lonlat_exprs("event_id")
     cell_e = cellcodec.sql_cell_expr(lon_e, lat_e, STAY_RES)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    if n_ev <= sessions.SMALL_CUTOFF:
-        # fused one-window small path (r6, same dial as user_trips):
-        # the previous cell is lag() of the SAME cell expression the
-        # pair path derives from prev_id — identical values — and the
-        # run index is the running break sum in the same window. Two
-        # exchanges replace pair window + event-keyed stitch join +
-        # prefix window.
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("us").asc(), F.col("event_id").asc()
-        )
-        lagged = (
-            ev.select(
-                "event_id", "user_id", us.alias("us"),
-                F.expr(cell_e).alias("cell"),
-            )
-            .withColumn("prev_cell", F.lag("cell").over(w))
-            .withColumn("prev_us", F.lag("us").over(w))
-        )
-        st = F.when(
-            (F.col("prev_cell") == F.col("cell"))
-            & ((F.col("us") - F.col("prev_us")) <= F.lit(STAY_GAP_US)),
-            F.lit(0),
-        ).otherwise(F.lit(1))
-        runs = lagged.withColumn(
-            "trip",
-            F.sum(st)
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("bigint"),
-        )
-        return (
-            runs.groupBy("user_id", "trip")
-            .agg(
-                F.min("cell").alias("stay_cell"),
-                F.count("*").alias("n_pings"),
-                F.min("us").alias("enter_us"),
-                (F.max("us") - F.min("us")).alias("dwell_us"),
-            )
-            .filter(
-                (F.col("n_pings") >= 2)
-                & (F.col("dwell_us") >= F.lit(STAY_MIN_DWELL_US))
-            )
-            .select("user_id", "stay_cell", "n_pings", "enter_us", "dwell_us")
-        )
-    pairs = sessions.consecutive_pairs(
-        ev, bucket_us=TRAVEL_BUCKET_US, n_hint=n_ev
+    ev = src.load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", F.expr(cell_e).alias("cell")
     )
-    lon_p, lat_p = geometry.sql_lonlat_exprs("prev_id")
-    c_prev = cellcodec.sql_cell_expr(lon_p, lat_p, STAY_RES)
-    c_cur = cellcodec.sql_cell_expr(lon_e, lat_e, STAY_RES)
-    cont = pairs.select(
-        "event_id",
-        F.when(
-            (F.expr(c_prev) == F.expr(c_cur))
-            & ((F.col("us") - F.col("prev_us")) <= F.lit(STAY_GAP_US)),
-            F.lit(0),
-        ).otherwise(F.lit(1)).alias("st"),
+    brk = (F.col("cell") != F.col("prev_cell")) | (
+        (F.col("us") - F.col("prev_us")) > F.lit(STAY_GAP_US)
     )
-    flagged = (
-        ev.select(
-            "event_id", "user_id", us.alias("us"),
-            F.expr(cell_e).alias("cell"),
-        )
-        .join(cont, "event_id", "left")
-        .withColumn("st", F.coalesce("st", F.lit(1)))
-    )
-    runs = sessions.prefix_starts(flagged, bucket_us=TRAVEL_BUCKET_US)
+    stays = sessions.runs(ev, ["us", "cell"], brk, TRAVEL_BUCKET_US)
     return (
-        runs.groupBy("user_id", "trip")
+        stays.groupBy("user_id", "run")
         .agg(
             F.min("cell").alias("stay_cell"),  # constant within a run
             F.count("*").alias("n_pings"),

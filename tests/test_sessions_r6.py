@@ -1,5 +1,5 @@
-"""Round-6: the session family's data-adaptive one-window small path
-must be row-identical to the hot-key-bounded two-phase shape."""
+"""The session family's data-adaptive one-window small path must be
+row-identical to the hot-key-bounded two-phase shape."""
 
 import numpy as np
 import pytest
@@ -59,38 +59,52 @@ def test_sessionize_paths_match(events):
     assert small == two_phase
 
 
-def test_prefix_starts_paths_match(events):
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    flagged = events.select(
-        "event_id",
-        "user_id",
-        us.alias("us"),
-        (F.col("event_id") % 3 == 0).cast("int").alias("st"),
+def _runs_rows(df, **kw):
+    """runs with a predicate that reads a non-time prev_ column (a
+    cell change, as in stay_points), so the bounded plan's stitch
+    evaluates it across bucket boundaries."""
+    ev = df.withColumn("cell", F.col("event_id") % 2)
+    brk = (F.col("cell") != F.col("prev_cell")) | (
+        (F.col("us") - F.col("prev_us")) > F.lit(6 * 3_600_000_000)
     )
-    n = flagged.count()
-    cols = ["user_id", "event_id", "us", "st", "trip"]
-    small = _rows(
-        sessions.prefix_starts(flagged, BUCKET, n_hint=n), cols
+    out = sessions.runs(ev, ["us", "cell"], brk, BUCKET, **kw)
+    cols = ["user_id", "event_id", "us", "cell", "prev_us", "prev_cell",
+            "st", "run"]
+    assert out.columns == ["event_id", "user_id", "ts", "cell", "us",
+                           "prev_us", "prev_cell", "st", "run"]
+    return _rows(out, cols)
+
+
+def test_runs_paths_match(spark, events):
+    one_event = spark.createDataFrame(
+        [(1, 9, "2031-03-01 00:00:00")],
+        "event_id long, user_id long, ts string",
     )
-    two_phase = _rows(
-        sessions.prefix_starts(flagged, BUCKET, n_hint=n, small_cutoff=0),
-        cols,
-    )
-    assert small == two_phase
+    results = []
+    for df in (events, events.limit(0), one_event):
+        small = _runs_rows(df)
+        assert small == _runs_rows(df, small_cutoff=0)
+        results.append(small)
+    full, empty, (row,) = results
+    assert len(full) == 5000 and empty == []
+    assert {r[6] for r in full} == {0, 1}  # continuations and breaks
+    assert row[:2] + row[4:] == (9, 1, None, None, 1, 1)
 
 
 def test_fused_trip_and_stay_queries_match_composed(spark, monkeypatch):
-    """r6: the fused one-window small paths of q_user_trips and
-    q_stay_points must be row-identical to the composed pair-window +
-    stitch-join + prefix shape (forced by zeroing the dial)."""
+    """q_user_trips, q_stay_points and q_session_overlap give the same
+    rows with the session family's one-window plans (sf0.01 is under
+    SMALL_CUTOFF) as with the bounded two-phase plans of runs and
+    sessionize, forced by zeroing the dial (session_overlap also
+    swaps its interval sweep for the bucketed join)."""
     from covertree_spark import queries as Q
 
     sf = "/root/testdata/sf0.01"
     for qname in ("user_trips", "stay_points", "session_overlap"):
         fn = Q.catalog()[qname][0]
-        fused = sorted(map(tuple, fn(spark, sf).collect()))
+        small = sorted(map(tuple, fn(spark, sf).collect()))
         monkeypatch.setattr(sessions, "SMALL_CUTOFF", 0)
-        composed = sorted(map(tuple, fn(spark, sf).collect()))
+        bounded = sorted(map(tuple, fn(spark, sf).collect()))
         monkeypatch.undo()
-        assert len(fused) > 0
-        assert fused == composed, qname
+        assert len(small) > 0
+        assert small == bounded, qname

@@ -371,7 +371,8 @@ def test_sessionize_hot_user_bounded(spark):
         F.lit(7).cast("bigint").alias("user_id"),
         F.timestamp_micros(us).alias("ts"),
     )
-    got = sessionize(ev, GAP)
+    # 10^6 events is under SMALL_CUTOFF: force the bounded plan
+    got = sessionize(ev, GAP, small_cutoff=0)
     want = sessionize_single_window(ev, GAP)
     merged = got.alias("a").join(
         want.alias("b"), ["event_id", "user_id"], "full"

@@ -46,7 +46,12 @@ def test_consecutive_pairs_matches_single_window(spark):
     )
     for bucket_us in (3_600_000_000, 21_600_000_000, 86_400_000_000):
         got = sorted(
-            map(tuple, consecutive_pairs(ev, bucket_us=bucket_us).collect())
+            map(
+                tuple,
+                consecutive_pairs(
+                    ev, bucket_us=bucket_us, small_cutoff=0
+                ).collect(),
+            )
         )
         assert got == want, f"bucket_us={bucket_us}"
 
@@ -87,43 +92,74 @@ def test_travel_segment_quantization_clearance(spark):
 
 
 @pytest.mark.usefixtures("spark")
-def test_prefix_starts_hot_user_bounded(spark):
-    """prefix_starts (the trip-index prefix sum over EXTERNAL break
-    flags) matches the classic one-window cumulative sum on a
-    pathological 10^6-event single user, while phase-1 tasks stay
-    bounded by the (user, bucket) group — the same contract as
-    sessionize, now for flags the engine computed from geometry."""
+def test_runs_hot_user_bounded(spark):
+    """runs' bounded two-phase plan (forced: 10^6 events is under
+    SMALL_CUTOFF) matches the classic one-window lag + cumulative sum
+    on a pathological 10^6-event single user, with a break predicate
+    over a non-time column, while phase-1 tasks stay bounded by the
+    (user, bucket) group."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from covertree_spark.operators.sessions import prefix_starts
+    from covertree_spark.operators.sessions import runs
 
     n = 1_000_000
-    # one event per minute; a break flag every 37th event
+    bucket_us = 7_200_000_000
+    # one event per minute, every 37th event after an extra 3 h silence;
+    # the cell changes every 53 events
+    us = F.col("id") * F.lit(60 * 1_000_000) + F.floor(
+        F.col("id") / 37
+    ) * F.lit(3 * 3_600_000_000)
     ev = spark.range(n).select(
         F.col("id").alias("event_id"),
         F.lit(7).cast("bigint").alias("user_id"),
-        (F.col("id") * F.lit(60 * 1_000_000)).alias("us"),
-        (F.col("id") % 37 == 0).cast("int").alias("st"),
+        F.timestamp_micros(us).alias("ts"),
+        F.floor(F.col("id") / 53).alias("cell"),
     )
-    got = prefix_starts(ev, bucket_us=7_200_000_000)
+    brk = (F.col("cell") != F.col("prev_cell")) | (
+        (F.col("us") - F.col("prev_us")) > F.lit(3_600_000_000)
+    )
+    got = runs(ev, ["us", "cell"], brk, bucket_us, small_cutoff=0)
     w = Window.partitionBy("user_id").orderBy(
-        F.col("us").asc(), F.col("event_id").asc()
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    want = ev.select(
-        "event_id", F.sum("st").over(w).cast("bigint").alias("trip")
+        F.col("ts").asc(), F.col("event_id").asc()
     )
-    merged = got.select("event_id", "trip").alias("a").join(
-        want.alias("b"), "event_id", "full"
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    lagged = ev.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.lag("cell").over(w).alias("prev_cell"),
+        (
+            F.lag("event_id").over(w).isNull()
+            | (F.lag("cell").over(w) != F.col("cell"))
+            | ((us - F.lag(us).over(w)) > F.lit(3_600_000_000))
+        ).cast("int").alias("st"),
     )
+    want = lagged.select(
+        "event_id", "prev_cell", "st",
+        F.sum("st").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ).cast("bigint").alias("run"),
+    )
+    merged = got.select("event_id", "prev_cell", "st", "run").alias(
+        "a"
+    ).join(want.alias("b"), "event_id", "full")
     assert merged.count() == n
     assert (
-        merged.filter(F.col("a.trip") != F.col("b.trip")).count() == 0
+        merged.filter(
+            ~F.col("a.prev_cell").eqNullSafe(F.col("b.prev_cell"))
+            | (F.col("a.st") != F.col("b.st"))
+            | F.col("a.run").isNull()
+            | (F.col("a.run") != F.col("b.run"))
+        ).count()
+        == 0
     )
-    # task-size contract: minute cadence -> <= 121 events per 2h bucket
+    # cell changes add runs: gap breaks alone give n / 37
+    assert want.agg(F.max("run")).first()[0] > n // 37
+    # task-size contract: minute cadence -> <= 120 events per 2h bucket
     assert got.groupBy(
-        F.floor(F.col("us") / 7_200_000_000)
-    ).count().agg(F.max("count")).first()[0] <= 121
+        F.floor(F.col("us") / bucket_us)
+    ).count().agg(F.max("count")).first()[0] <= 120
 
 
 @pytest.mark.usefixtures("spark")
