@@ -53,12 +53,13 @@ from covertree_spark.plans import metrics as M  # noqa: E402
 from covertree_spark.plans.session import (  # noqa: E402
     ReleaseScope,
     get_spark,
+    host_cpus,
     release_intermediates,
 )
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = host_cpus()
 # total passes (1 cold + N-1 warm); 4 warm passes spread across the
 # run give min-of-4 with interleaved noise exposure
 PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))

@@ -26,12 +26,13 @@ from covertree_spark import queries as Q  # noqa: E402
 from covertree_spark.plans.session import (  # noqa: E402
     ReleaseScope,
     get_spark,
+    host_cpus,
     release_intermediates,
 )
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = host_cpus()
 PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "4"))
 
 

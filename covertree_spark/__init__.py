@@ -18,3 +18,11 @@ from covertree_spark.plans.hostmem import apply_malloc_reuse as _amr
 
 _amr()
 del _amr
+
+# Python workers re-parse every zip archive on sys.path at the start of
+# each task; skip the re-read while the archive is unchanged — see
+# plans/zipcache.py.
+from covertree_spark.plans.zipcache import apply_zip_cache_check as _azc
+
+_azc()
+del _azc

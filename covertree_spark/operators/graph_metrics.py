@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import mark_releasable
+
 
 def _canonical(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     return (
@@ -59,7 +61,7 @@ def triangle_counts(
     column) adds triangle-free vertices with count 0; without it only
     edge endpoints appear.
     """
-    c = _canonical(edges, src_col, dst_col).persist()
+    c = mark_releasable(_canonical(edges, src_col, dst_col).persist())
 
     # degree over the undirected graph, then the (deg, id) total order
     sym = c.select(F.col("a").alias("u")).unionAll(
@@ -75,11 +77,13 @@ def triangle_counts(
     )
     # oriented edge u -> v with u strictly before v in the total order;
     # carry v's order key for the wedge-ordering predicate below
-    d = j.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("vdeg"),
-    ).persist()
+    d = mark_releasable(
+        j.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("vdeg"),
+        ).persist()
+    )
 
     # wedges from each out-neighborhood: (x; y, z) with y before z —
     # every triangle x<y<z (order-wise) is generated exactly once
@@ -191,7 +195,7 @@ def walk_mass(
     e = edges.select(
         F.col("src").alias("s"), F.col("dst").alias("t")
     ).where(F.col("s") != F.col("t"))
-    sym = (
+    sym = mark_releasable(
         e.union(e.select(F.col("t").alias("s"), F.col("s").alias("t")))
         .distinct()
         .persist()
@@ -199,7 +203,7 @@ def walk_mass(
     deg = sym.groupBy("s").agg(F.count("*").alias("deg"))
     # (s, t, deg(s)) computed ONCE; each round is then a single
     # id-keyed join + aggregate against it
-    share_edges = sym.join(deg, "s").persist()
+    share_edges = mark_releasable(sym.join(deg, "s").persist())
     ids = nodes.select(F.col(id_col).alias("id"))
     mass = ids.select("id", F.lit(int(init)).cast("bigint").alias("mass"))
     for _ in range(int(rounds)):

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import mark_releasable
 from ..sources.tables import vec_matrix
 
 
@@ -59,7 +60,7 @@ def lloyd_kmeans(
     [k x d float64]). cluster = center index 0..k-1 under the
     deterministic init order.
     """
-    pts = points.select("id", "vec").persist()
+    pts = mark_releasable(points.select("id", "vec").persist())
     centers = _init_centers(pts, k)
 
     def partials_fn(C: np.ndarray):

@@ -8,6 +8,8 @@ parallelism via ``local[N]``.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -15,21 +17,47 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
+@functools.cache
 def _package_zip() -> str:
     """Zip the covertree_spark package for worker distribution — the
     same artifact ``spark-submit --py-files`` would ship (north_rule
-    deployment mode). Cached per process."""
+    deployment mode). Built once per process.
+
+    The name carries a hash of the packaged sources, and the archive is
+    written under a temporary name and ``os.replace``d into place, so
+    processes sharing the temp directory never rewrite a zip another
+    one has handed to Spark: the same sources resolve to the same
+    complete file, different sources to a different name."""
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     root = os.path.dirname(pkg_dir)
-    out = os.path.join(tempfile.gettempdir(), "covertree_spark_pyfiles.zip")
-    with zipfile.ZipFile(out, "w") as z:
-        for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-            if "__pycache__" in dirpath:
-                continue
-            for f in filenames:
-                if f.endswith(".py"):
-                    full = os.path.join(dirpath, f)
-                    z.write(full, os.path.relpath(full, root))
+    sources = []
+    for dirpath, dirnames, filenames in os.walk(pkg_dir):
+        dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
+        for f in sorted(filenames):
+            if f.endswith(".py"):
+                full = os.path.join(dirpath, f)
+                with open(full, "rb") as fh:
+                    sources.append((os.path.relpath(full, root), fh.read()))
+    digest = hashlib.sha256()
+    for rel, data in sources:
+        digest.update(rel.encode() + b"\0" + data + b"\0")
+    tmpdir = tempfile.gettempdir()
+    out = os.path.join(
+        tmpdir, f"covertree_spark_pyfiles-{digest.hexdigest()[:16]}.zip"
+    )
+    if os.path.exists(out):
+        return out
+    fd, tmp = tempfile.mkstemp(
+        prefix="covertree_spark_pyfiles-", suffix=".zip.part", dir=tmpdir
+    )
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+            for rel, data in sources:
+                z.writestr(rel, data)
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return out
 
 
@@ -112,6 +140,22 @@ def release_intermediates() -> int:
     return n
 
 
+def host_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
+
+
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else min(16g, half the host's RAM)."""
+    mem = os.environ.get("SPARK_DRIVER_MEMORY")
+    if mem is None:
+        total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+        mem = f"{min(16384, total_mb // 2)}m"
+    return mem
+
+
 def get_spark(
     app_name: str = "covertree_spark",
     cpus: int | None = None,
@@ -119,7 +163,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = host_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
     # Worker-process memory hygiene, inherited via the JVM child env:
@@ -149,7 +193,7 @@ def get_spark(
                 "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

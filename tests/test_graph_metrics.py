@@ -112,3 +112,33 @@ def test_bfs_path_and_unreachable(spark):
         ).collect()
     }
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: -1}
+
+
+def test_operator_persists_released_with_query_scope(spark):
+    """triangle_counts, walk_mass and lloyd_kmeans register their
+    persisted intermediates with the active ReleaseScope, so releasing
+    the query leaves no cached RDD behind."""
+    from covertree_spark.operators.graph_metrics import walk_mass
+    from covertree_spark.operators.kmeans import lloyd_kmeans
+    from covertree_spark.plans.session import ReleaseScope
+
+    def persisted():
+        # ids, not a count: the context cleaner may drop earlier tests'
+        # unreferenced checkpoint RDDs while this query runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    edges = edges_df(spark, rand_edges(5, n=40, m=120))
+    X = np.random.default_rng(5).normal(size=(60, 3))
+    pts = spark.createDataFrame(
+        [(i, [float(v) for v in x]) for i, x in enumerate(X)],
+        "id bigint, vec array<float>",
+    )
+    before = persisted()
+    with ReleaseScope() as rs:
+        triangle_counts(edges, nodes_df(spark, 40)).collect()
+        walk_mass(edges, nodes_df(spark, 40), rounds=2).collect()
+        assign, _ = lloyd_kmeans(pts, 3, iters=2)
+        assign.collect()
+    assert persisted() - before
+    assert rs.release() == 5
+    assert not persisted() - before

@@ -78,3 +78,30 @@ def test_spark_submit_py_files_runs_catalog_query(spark, tmp_path):
     assert line, f"no SUBMIT_OK in stdout: {res.stdout[-1000:]}"
     _tag, _n, digest = line.split()
     assert digest == expected
+
+
+def test_package_zip_is_built_once_per_source_state(tmp_path, monkeypatch):
+    """Same sources -> same complete file, never rewritten, so a worker
+    can't be served a zip another process is truncating."""
+    import tempfile
+    import zipfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    _package_zip.cache_clear()
+    try:
+        first = _package_zip()
+        st = os.stat(first)
+        data = open(first, "rb").read()
+        assert _package_zip() == first
+        _package_zip.cache_clear()  # as a second process would
+        assert _package_zip() == first
+        assert os.stat(first).st_mtime_ns == st.st_mtime_ns
+        assert open(first, "rb").read() == data
+    finally:
+        _package_zip.cache_clear()
+    assert os.path.dirname(first) == str(tmp_path)
+    assert os.listdir(tmp_path) == [os.path.basename(first)]
+    with zipfile.ZipFile(first) as z:
+        names = set(z.namelist())
+    assert {"covertree_spark/__init__.py",
+            "covertree_spark/plans/zipcache.py"} <= names
