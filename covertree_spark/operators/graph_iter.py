@@ -128,7 +128,7 @@ def sssp_from_largest_component(
         ids, d = _sssp_kernel(src, dst, w, source, rounds)
         yield pd.DataFrame({"id": ids, "d": d})
 
-    return ew.select("src", "dst", "w").repartition(1).mapInPandas(
+    return ew.select("src", "dst", "w").coalesce(1).mapInPandas(
         run, schema="id bigint, d bigint"
     )
 
@@ -169,7 +169,7 @@ def bounded_sssp(
                 )
             yield pd.DataFrame({"id": ids, "d": d})
 
-        return ew.select("src", "dst", "w").repartition(1).mapInPandas(
+        return ew.select("src", "dst", "w").coalesce(1).mapInPandas(
             run, schema="id bigint, d bigint"
         )
 
@@ -255,7 +255,7 @@ def bounded_kcore(
             )
             yield pd.DataFrame({"id": ids})
 
-        return edges.select("src", "dst").repartition(1).mapInPandas(
+        return edges.select("src", "dst").coalesce(1).mapInPandas(
             run, schema="id bigint"
         )
 

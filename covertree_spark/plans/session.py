@@ -12,6 +12,7 @@ import functools
 import hashlib
 import os
 import tempfile
+import time
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -27,7 +28,12 @@ def _package_zip() -> str:
     written under a temporary name and ``os.replace``d into place, so
     processes sharing the temp directory never rewrite a zip another
     one has handed to Spark: the same sources resolve to the same
-    complete file, different sources to a different name."""
+    complete file, different sources to a different name.
+
+    Each source state leaves one zip behind. Building a new one
+    deletes the other package zips (and ``.zip.part`` leftovers of a
+    killed build) last modified more than ``_STALE_ZIP_S`` ago; the
+    current name is never deleted."""
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     root = os.path.dirname(pkg_dir)
     sources = []
@@ -58,7 +64,32 @@ def _package_zip() -> str:
     except BaseException:
         os.unlink(tmp)
         raise
+    _prune_stale_zips(tmpdir, keep=out)
     return out
+
+
+_STALE_ZIP_S = 24 * 3600
+
+
+def _prune_stale_zips(tmpdir: str, keep: str) -> None:
+    """Delete package zips and build leftovers in ``tmpdir`` older
+    than ``_STALE_ZIP_S``, except ``keep``. A local SparkContext reads
+    an added file when it is added and at its first task, then serves
+    its own copy, so deleting a zip only affects a process that adds it
+    to a new SparkContext, or runs that context's first task, more than
+    ``_STALE_ZIP_S`` after the zip was written."""
+    cutoff = time.time() - _STALE_ZIP_S
+    for name in os.listdir(tmpdir):
+        path = os.path.join(tmpdir, name)
+        if not name.startswith("covertree_spark_pyfiles") or path == keep:
+            continue
+        if not name.endswith((".zip", ".zip.part")):
+            continue
+        try:
+            if os.stat(path).st_mtime < cutoff:
+                os.unlink(path)
+        except OSError:
+            pass  # gone already, or not ours to delete
 
 
 # ---- persisted-intermediate registry (caching contract) --------------------

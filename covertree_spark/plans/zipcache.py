@@ -16,11 +16,13 @@ the redundant work:
 
 * every directory read records the archive's signature
   ``(st_ino, st_size, st_mtime_ns)``, taken by ``stat`` BEFORE the
-  read, next to the directory it produced;
+  read;
 * ``zipimporter.invalidate_caches`` stats the archive and, when the
-  signature equals the recorded one, adopts the recorded directory
-  instead of re-reading it. Any other outcome (no record, a replaced
-  or rewritten archive, a missing file) runs the original method.
+  signature equals the recorded one, adopts the directory zipimport
+  itself cached for that archive (``_zip_directory_cache``, which
+  every read refreshes) instead of re-reading it. Any other outcome
+  (no record, a replaced or rewritten archive, a missing file, no
+  cached directory) runs the original method.
 
 Stat-before-read means an archive rewritten during a read records the
 old signature, so the next invalidation reads it again. Not detected:
@@ -47,8 +49,8 @@ import zipimport
 
 _orig_read = getattr(zipimport, "_read_directory", None)
 _orig_invalidate = zipimport.zipimporter.invalidate_caches
-# archive path -> (signature at read time, directory dict it produced)
-_READS: dict = {}
+# archive path -> its signature when its directory was last read
+_SIGNATURES: dict = {}
 
 
 def _signature(archive: str):
@@ -62,18 +64,18 @@ def _signature(archive: str):
 def _recording_read(archive):
     sig = _signature(archive)
     files = _orig_read(archive)
-    _READS[archive] = (sig, files)
+    _SIGNATURES[archive] = sig
     return files
 
 
 def _invalidate_caches(self):
     sig = _signature(self.archive)
-    rec = _READS.get(self.archive)
-    if sig is not None and rec is not None and rec[0] == sig:
-        self._files = rec[1]
-        zipimport._zip_directory_cache[self.archive] = rec[1]
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if (sig is not None and files is not None
+            and _SIGNATURES.get(self.archive) == sig):
+        self._files = files
         return
-    _READS.pop(self.archive, None)
+    _SIGNATURES.pop(self.archive, None)
     _orig_invalidate(self)
 
 

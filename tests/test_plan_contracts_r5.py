@@ -226,27 +226,3 @@ def test_build_trees_feeds_metrics(spark, monkeypatch):
     build_trees(pts, d=3).count()
     assert meters.value > 0
     assert meters.udf_wall > 0
-
-
-def test_graph_iter_single_task_reads_an_exchange(spark):
-    """The single-task sssp/kcore paths gather their edges with a
-    shuffle, not a Coalesce: coalesce(1) would fold the whole upstream
-    plan into the one Python task."""
-    from covertree_spark.operators.graph_iter import (
-        bounded_kcore,
-        bounded_sssp,
-        sssp_from_largest_component,
-    )
-
-    e = [(1, 2, 3), (2, 3, 4), (3, 1, 5), (3, 4, 6)]
-    e += [(b, a, w) for a, b, w in e]
-    ew = spark.createDataFrame(e, "src long, dst long, w long").repartition(3)
-    for out in (
-        sssp_from_largest_component(ew, 4),
-        bounded_sssp(ew, 1, 4),
-        bounded_kcore(ew.select("src", "dst"), 2, 4),
-    ):
-        node = _find(_physical(out), "MapInPandas")
-        assert node is not None
-        (child,) = _children(node)
-        assert child.nodeName() == "Exchange", child.nodeName()

@@ -105,3 +105,29 @@ def test_package_zip_is_built_once_per_source_state(tmp_path, monkeypatch):
         names = set(z.namelist())
     assert {"covertree_spark/__init__.py",
             "covertree_spark/plans/zipcache.py"} <= names
+
+
+def test_package_zip_prunes_stale_zips_on_build(tmp_path, monkeypatch):
+    """Building a new zip deletes package zips and build leftovers older
+    than a day, and keeps young ones and unrelated files."""
+    import tempfile
+    import time
+
+    from covertree_spark.plans import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    old = time.time() - session._STALE_ZIP_S - 60
+    stale = ["covertree_spark_pyfiles-0123456789abcdef.zip",
+             "covertree_spark_pyfiles-x1y2z3.zip.part",
+             "covertree_spark_pyfiles.zip"]
+    kept = ["covertree_spark_pyfiles-fedcba9876543210.zip", "other.zip"]
+    for name in stale + kept:
+        (tmp_path / name).write_bytes(b"x")
+    for name in stale + kept[1:]:
+        os.utime(tmp_path / name, (old, old))
+    _package_zip.cache_clear()
+    try:
+        current = os.path.basename(_package_zip())
+    finally:
+        _package_zip.cache_clear()
+    assert sorted(os.listdir(tmp_path)) == sorted(kept + [current])
